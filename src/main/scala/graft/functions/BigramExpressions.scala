@@ -125,6 +125,22 @@ object BigramRuntime {
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 
+  /** Slot count of an open-addressed table for `elements` keys: the
+    * smallest power of two ≥ `minSlots` (at least 4), computed in Long
+    * so a huge input fails loudly naming its size instead of wrapping
+    * Int arithmetic into an endless probe loop or a negative array
+    * size. 2^30 is the largest power-of-two Int array length.
+    */
+  private[functions] def tableCapacity(elements: Int, minSlots: Long): Int = {
+    val need = math.max(4L, minSlots)
+    val slots =
+      if (java.lang.Long.bitCount(need) == 1) need
+      else java.lang.Long.highestOneBit(need) << 1
+    require(slots <= (1L << 30),
+      s"$elements elements need a $slots-slot hash table; the limit is 2^30")
+    slots.toInt
+  }
+
   def bigramCounts(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n < 2) return Empty
@@ -136,8 +152,7 @@ object BigramRuntime {
     while (i < n) { th(i) = tokenHash(arr, i, Seed); i += 1 }
     val pairs = n - 1
     // open-addressed map keyed on (h1, h2, h12); cnt == 0 marks empty
-    var cap = 4
-    while (cap < pairs * 2) cap <<= 1
+    val cap = tableCapacity(pairs, 2L * pairs)
     val mask = cap - 1
     val kh1 = new Array[Long](cap); val kh2 = new Array[Long](cap)
     val kh12 = new Array[Long](cap); val cnt = new Array[Long](cap)
@@ -176,7 +191,8 @@ object BigramRuntime {
   def tokenHashCounts(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return Empty
-    val kh = new Array[Long](math.max(4, Integer.highestOneBit(n) * 4))
+    val kh = new Array[Long](
+      tableCapacity(n, java.lang.Long.highestOneBit(n) * 4L))
     val cnt = new Array[Long](kh.length)
     val mask = kh.length - 1
     val order = new Array[Int](n)

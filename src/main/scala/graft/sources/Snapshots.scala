@@ -474,10 +474,17 @@ object Snapshots {
     */
   private def writeDataFiles(df: DataFrame, rootP: Path, v: Int,
                              token: String, kind: String = "data"): Seq[String] = {
-    val dataDir = rootP.resolve(s"${kind}_v${v}_$token")
+    val dataDir = stagedDir(rootP, kind, v, token)
     df.write.mode("overwrite").parquet(dataDir.toString)
     listParquet(dataDir)
   }
+
+  /** A writer's staged dir for attempt version `v`: `data` files or
+    * `delete` tombstones, named `<kind>_v<v>_<token>`.
+    */
+  private def stagedDir(rootP: Path, kind: String, v: Int,
+                        token: String): Path =
+    rootP.resolve(s"${kind}_v${v}_$token")
 
   /** The `.parquet` files directly under a staged dir, absolute and
     * sorted — the one spelling of "what did that write job produce"
@@ -611,8 +618,8 @@ object Snapshots {
     * list. The manifest LINK is the commit — and the CAS: hard-linking
     * the staged file onto an existing manifest name throws
     * `FileAlreadyExistsException`, which is exactly the "another
-    * writer claimed this version" signal optimistic committers
-    * ([[append]]/[[deleteWhere]]) catch and rebase on. `_latest` is
+    * writer claimed this version" signal [[commitStaged]] catches and
+    * rebases on. `_latest` is
     * written after as a non-authoritative hint ([[latestVersion]] scans
     * the manifest dir). The staged temp name carries a writer-unique
     * token so racing stagings never collide.
@@ -726,14 +733,10 @@ object Snapshots {
   }
 
   /** OPTIMISTIC-CONCURRENCY append (r9): the data files are written
-    * once to a writer-unique directory; the manifest rename is a CAS on
-    * the version number. On conflict the loser REBASES — recompute the
-    * latest version, rename its (already-written) data dir to the new
-    * version, re-derive the carried-forward entries and schema from the
-    * winner's manifest, and retry the CAS. An append conflicts with
-    * nothing semantically (its rows are new), so the retry always
-    * converges — the Iceberg/Delta optimistic-commit protocol with the
-    * data write amortized across retries.
+    * once to a writer-unique directory and committed through
+    * [[commitStaged]]; a loser REBASES onto the winner's manifest. An
+    * append conflicts with nothing semantically (its rows are new), so
+    * the retry always converges.
     */
   def append(df: DataFrame, root: String): Int = append(df, root, Nil)
 
@@ -772,15 +775,13 @@ object Snapshots {
         s"#bloom:$c=${blooms(c).getOrElse(f, bitsToHex(Nil))}")
       (line +: toks).mkString("\t")
     }
-    casAppend(df, rootP, root, branch, v, token, lines)
+    casAppend(df, root, branch, v, token, lines)
   }
 
-  /** The append commit protocol, shared by [[append]] and
-    * [[appendChecked]]: optimistic CAS with rebase (an append
-    * conflicts with nothing semantically — its rows are new — so the
-    * retry always converges). The staged dirs carry the ATTEMPTED
-    * version in their name; a reallocation renames them so
-    * [[dataVersionOf]] sequence scoping stays truthful.
+  /** The append commit, shared by [[append]], [[appendPartitioned]]
+    * and [[appendChecked]]: a [[commitStaged]] that always rebases (an
+    * append conflicts with nothing semantically — its rows are new —
+    * so the retry always converges).
     *
     * `checks`/`validatedBasis` (r15): [[appendChecked]]'s snapshot-
     * wide Unique validation ran against `validatedBasis`'s live rows;
@@ -792,106 +793,49 @@ object Snapshots {
     * refuses). Bounded at one key-pruned survivor scan per basis
     * move; unchecked appends (checks empty) skip all of it.
     */
-  private def casAppend(df: DataFrame, rootP: Path, root: String,
+  private def casAppend(df: DataFrame, root: String,
                         branch: String, v0: Int, token: String,
-                        lines0: Seq[String],
+                        lines: Seq[String],
                         checks: Seq[graft.operators.QualityChecks.Check] = Nil,
                         validatedBasis: Int = -1): Int = {
-    var v = v0
-    var lines = lines0
     var basis = validatedBasis
     val uniques = checks.collect {
       case u: graft.operators.QualityChecks.Unique => u }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("data"))
-      lines = lines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      v = newV
-    }
     val inbounds = checks.collect {
       case i: graft.operators.QualityChecks.InboundRef => i }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) reallocate() // stale pre-write allocation
-      else {
+    commitStaged(root, branch, v0, token, "data") { (parent, v) =>
       // an InboundRef's post-image basis is invalidated by a
-      // concurrent commit that can REMOVE a referenced key
-      // (delete/merge/update); unlike the Unique legs there is no
-      // cheap key-scoped revalidation, so the append ABORTS (the
-      // mergeChecked rule) — declaring a post-image check trades
-      // rebase liveness for the stronger promise. Rewrites carry the
-      // same rows and concurrent APPENDS only add keys — InboundRef
-      // is monotone in the table's key set (and cherry-picks strip
-      // delete lines, so op=append is purely additive everywhere) —
-      // so neither costs liveness (r16)
-      if (inbounds.nonEmpty && parent != basis && parent > 0 &&
-          basisWindowInvalidated(root, math.max(basis, 0), parent) { p =>
-            !p.get("rewrite").contains("true") &&
-              !p.get("op").contains("append")
-          }) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
+      // concurrent commit that can REMOVE a referenced key; unlike the
+      // Unique legs there is no cheap key-scoped revalidation, so the
+      // append ABORTS (the mergeChecked rule) — declaring a post-image
+      // check trades rebase liveness for the stronger promise
+      if (basisInvalidated(root, inbounds, basis, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked append aborted: a concurrent commit in ($basis, " +
             s"$parent] invalidated its InboundRef post-image basis — " +
             "re-read and re-run")
-      }
-      if (uniques.nonEmpty && parent != basis && parent > 0) {
-        // the staged dir is deleted on refusal AND on a revalidation
-        // error — "a refused batch changes NOTHING" covers error
-        // paths here exactly as in validateStagedOrAbort
+      if (uniques.nonEmpty && parent != basis) {
+        val files = listParquet(stagedDir(Paths.get(root), "data", v, token))
         val bad =
-          try {
-            val files = lines.map(_.split('\t').head)
-            if (files.isEmpty) Nil
-            else crossUniqueBad(df.sparkSession.read.parquet(files: _*),
-              uniques, read(df.sparkSession, root, parent))
-          } catch { case scala.util.control.NonFatal(e) =>
-            deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-            throw e
-          }
-        if (bad.nonEmpty) {
-          deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-          throw new IllegalStateException(
-            "appendChecked refused — constraint violations: " + bad.map {
-              case (n, c) => s"$n ($c rows)" }.mkString(", "))
-        }
+          if (files.isEmpty) Nil
+          else crossUniqueBad(df.sparkSession.read.parquet(files: _*),
+            uniques, read(df.sparkSession, root, parent))
+        if (bad.nonEmpty) throw refused("appendChecked", bad)
         basis = parent
       }
-      try {
-        if (publish(rootP, root, branch, v, seq,
-            parent, widenedSchema(df, root, parent),
-            (if (parent == 0) Nil else bodyRefs(root, parent)) ++ lines,
-            props = Map("op" -> "append")))
-          committed = v
-        else reallocate() // head CAS lost: rebase on the new head
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+    } { (parent, _) =>
+      StagedCommit(widenedSchema(df, root, parent), lines,
+        Map("op" -> "append"))
     }
-    committed
   }
 
-  /** The ONE staged-batch validation of the checked writes
-    * ([[appendChecked]]/[[mergeChecked]]/[[updateChecked]]): run
-    * `checks` against the staged bytes at `newFiles`, extend every
-    * [[graft.operators.QualityChecks.Unique]] check to the POST-IMAGE
-    * by also counting batch keys colliding with `survivors` (the
-    * post-image rows NOT written by this commit — r15, closing the
-    * r14 batch-scoped-uniqueness gap), and on ANY violation or
-    * validation error delete `stagedDirs` and throw with the
-    * violating checks named. Scale shape: the batch legs are
-    * QualityChecks' one-scan report; each cross-batch unique leg is a
-    * key-column-pruned semi-join of the batch against the survivor
-    * scan — O(table's key column), the price of a uniqueness promise
-    * without a key index, paid only when a Unique check is declared.
-    * RowPredicate and RefIntegrity stay batch-scoped BY CONSTRUCTION,
-    * not as a gap: they are row-local, and rows not in this batch
-    * passed them at their own checked commit (delete/compact commits
-    * cannot mint a row-local violation).
+  /** The exception a checked write's constraint violations refuse it
+    * with, naming each violated check and its row count.
     */
+  private def refused(op: String, bad: Seq[(String, Long)]) =
+    new IllegalStateException(s"$op refused — constraint violations: " +
+      bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
+
   /** Cross-batch leg of a snapshot-wide Unique check: per check, how
     * many batch keys collide with `survivors`' keys. Null-SAFE
     * equality — two NULL keys in one batch refuse (report's groupBy
@@ -936,6 +880,25 @@ object Snapshots {
     }.filter(_._2 > 0)
   }
 
+  /** The ONE staged-batch validation of the checked writes
+    * ([[appendChecked]]/[[mergeChecked]]/[[updateChecked]], and
+    * [[deleteChecked]] as an empty batch over its post-image): run
+    * `checks` against the staged bytes at `newFiles`, extend every
+    * [[graft.operators.QualityChecks.Unique]] check to the POST-IMAGE
+    * by also counting batch keys colliding with `survivors` (the
+    * post-image rows NOT written by this commit — r15, closing the
+    * r14 batch-scoped-uniqueness gap), and on ANY violation or
+    * validation error delete `stagedDirs` and throw with the
+    * violating checks named. Scale shape: the batch legs are
+    * QualityChecks' one-scan report; each cross-batch unique leg is a
+    * key-column-pruned semi-join of the batch against the survivor
+    * scan — O(table's key column), the price of a uniqueness promise
+    * without a key index, paid only when a Unique check is declared.
+    * RowPredicate and RefIntegrity stay batch-scoped BY CONSTRUCTION,
+    * not as a gap: they are row-local, and rows not in this batch
+    * passed them at their own checked commit (delete/compact commits
+    * cannot mint a row-local violation).
+    */
   private def validateStagedOrAbort(spark: SparkSession,
       stagedDirs: Seq[Path], newFiles: Seq[String],
       checks: Seq[graft.operators.QualityChecks.Check],
@@ -1016,12 +979,7 @@ object Snapshots {
             .map { case (n, xs) => (n, xs.map(_._2).sum) }.toSeq.sortBy(_._1)
         }
       } catch { case scala.util.control.NonFatal(e) => abort(); throw e }
-    if (bad.nonEmpty) {
-      abort()
-      throw new IllegalStateException(
-        s"$op refused — constraint violations: " + bad.map {
-          case (n, c) => s"$n ($c rows)" }.mkString(", "))
-    }
+    if (bad.nonEmpty) { abort(); throw refused(op, bad) }
   }
 
   /** CHECKED append (r14 — Delta CHECK constraints / expectations with
@@ -1062,19 +1020,22 @@ object Snapshots {
     val newFiles = writeDataFiles(df, rootP, v, token)
     val head = headOf(root, branch)
     validateStagedOrAbort(df.sparkSession,
-      Seq(rootP.resolve(s"data_v${v}_$token")), newFiles, checks,
+      Seq(stagedDir(rootP, "data", v, token)), newFiles, checks,
       survivors = if (head > 0) Some(read(df.sparkSession, root, head))
                   else None,
       op = "appendChecked")
     afterCheckedValidation()
-    casAppend(df, rootP, root, branch, v, token, entryLines(df, newFiles),
+    casAppend(df, root, branch, v, token, entryLines(df, newFiles),
       checks = checks, validatedBasis = head)
   }
 
   /** Test seam (SnapshotsSpec): runs between a checked write's
     * ([[appendChecked]]/[[deleteChecked]]) constraint validation and
     * its CAS loop, so the revalidate-on-rebase and abort-on-basis-move
-    * paths are deterministically exercisable. A no-op in production. CONTRACT: single-threaded tests only — this is
+    * paths are deterministically exercisable. A no-op in production.
+    * It runs in the checked paths, never in [[commitStaged]]: tests
+    * commit from inside it, and the shared loop would re-enter it for
+    * that commit. CONTRACT: single-threaded tests only — this is
     * module-global state on a production object, so a test that sets
     * it must restore it in a finally, and checked appends must not
     * run concurrently with a test holding it. @volatile so a
@@ -1111,7 +1072,7 @@ object Snapshots {
     val rootP = Paths.get(root)
     val prev = headOf(root, branch)
     require(prev > 0, s"nothing to compact under $root")
-    var v = latestVersion(root) + 1
+    val v = latestVersion(root) + 1
     val prevData = read(spark, root, prev)
     import org.apache.spark.sql.functions.{broadcast, col, expr, lit, max, min}
     // sortBy: CLUSTERED compaction (Iceberg sort-order rewrite / Delta
@@ -1155,8 +1116,7 @@ object Snapshots {
       case _ => prevData.repartition(targetFiles)
     }
     val token = newToken()
-    var newFiles = writeDataFiles(reshaped, rootP, v, token)
-    var lines = entryLines(reshaped, newFiles)
+    val lines = entryLines(reshaped, writeDataFiles(reshaped, rootP, v, token))
     // a compaction REWRITES version `prev`'s content, so a commit that
     // landed meanwhile ON THIS BRANCH invalidates the rewrite — fail
     // loudly for the caller to re-run against the new head (Iceberg's
@@ -1164,32 +1124,15 @@ object Snapshots {
     // appends/deletes rebase automatically because their rows are new.
     // A mere VERSION-NUMBER collision (another branch's writer claimed
     // the number) is not a conflict: reallocate and retry.
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (parent != prev) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        throw new IllegalStateException(
-          s"concurrent commit landed during compaction of v$prev — " +
-            "re-run compact against the new head version")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            schemaOf(root, prev).getOrElse(prevData.schema), lines,
-            // Delta's dataChange=false: same rows, new bytes — CDC
-            // skips it
-            props = Map("rewrite" -> "true", "op" -> "rewrite")))
-          committed = v
-        // head CAS lost: loop re-resolves — a moved head aborts above
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val newV = reallocateStaged(rootP, root, v, token, Seq("data"))
-          lines = lines.map(
-            _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-          v = newV
-      }
+    commitStaged(root, branch, v, token, "data") { (parent, _) =>
+      if (parent != prev) throw new IllegalStateException(
+        s"concurrent commit landed during compaction of v$prev — " +
+          "re-run compact against the new head version")
+    } { (_, _) =>
+      // Delta's dataChange=false: same rows, new bytes — CDC skips it
+      StagedCommit(schemaOf(root, prev).getOrElse(prevData.schema), lines,
+        Map("rewrite" -> "true", "op" -> "rewrite"), carryParent = false)
     }
-    committed
   }
 
   /** METADATA-ONLY manifest compaction (r14 — Iceberg's
@@ -1241,6 +1184,11 @@ object Snapshots {
     compactManifestsImpl(None, root, branch, targetLines, clusterBy,
       Long.MaxValue)
 
+  /** Default body-size bound for the driver-side cluster sort
+    * (~40 MB of entry strings); above it the rewrite distributes.
+    */
+  val DriverSortMaxLines: Long = 1L << 18
+
   /** [[compactManifests]] with a DRIVER-MEMORY BOUND (r16 — the
     * Iceberg lesson that `rewrite_manifests` is a Spark job; named
     * after it): the no-session overload's cluster sort materializes the whole resolved
@@ -1266,11 +1214,6 @@ object Snapshots {
     * converge on identical files, and a lost CAS race orphans
     * segments that [[removeOrphans]] reaps like data files.
     */
-  /** Default body-size bound for the driver-side cluster sort
-    * (~40 MB of entry strings); above it the rewrite distributes.
-    */
-  val DriverSortMaxLines: Long = 1L << 18
-
   def rewriteManifests(spark: SparkSession, root: String,
                        branch: String = "main",
                        targetLines: Int = SegmentTargetLines,
@@ -1315,24 +1258,17 @@ object Snapshots {
           dels ++ data.sortBy(statMinOf(_, c).getOrElse(Long.MaxValue)),
           targetLines)
     }
-    var v = latestVersion(root) + 1
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
+    // no staged dirs: the segments are content-addressed, and an
+    // aborted attempt's orphans reap like data files
+    commitStaged(root, branch, latestVersion(root) + 1, "") { (parent, _) =>
       if (parent != prev) throw new IllegalStateException(
         s"concurrent commit landed during manifest compaction of v$prev — " +
           "re-run against the new head version")
-      try {
-        if (publish(rootP, root, branch, v, seq, parent, schema, lines,
-            props = Map("rewrite" -> "true", "op" -> "rewrite-manifests")))
-          committed = v
-        else v = latestVersion(root) + 1 // head CAS lost: loop re-resolves
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          v = latestVersion(root) + 1 // number claimed by another branch
-      }
+    } { (_, _) =>
+      StagedCommit(schema, lines,
+        Map("rewrite" -> "true", "op" -> "rewrite-manifests"),
+        carryParent = false)
     }
-    committed
   }
 
   /** The distributed clustered rewrite (r16 — Iceberg's
@@ -1710,8 +1646,8 @@ object Snapshots {
     val rootP = Paths.get(root)
     Files.createDirectories(rootP.resolve("_manifests"))
     val token = newToken()
-    var v = latestVersion(root) + 1
-    val dataDir = rootP.resolve(s"data_v${v}_$token")
+    val v = latestVersion(root) + 1
+    val dataDir = stagedDir(rootP, "data", v, token)
     df.withColumn("_p", spec.partExpr)
       .repartition(col("_p"))
       .write.partitionBy("_p").parquet(dataDir.toString)
@@ -1741,33 +1677,11 @@ object Snapshots {
       finally listing.close()
     }
     val values = byFile.toMap
-    var lines = entryLines(df.drop("_p"), byFile.map(_._1)).map { line =>
+    val lines = entryLines(df.drop("_p"), byFile.map(_._1)).map { line =>
       val f = line.split('\t').head
       s"$line\t#part:${spec.tokenName}=${values(f)}"
     }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("data"))
-      lines = lines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) reallocate() // stale pre-write allocation
-      else try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            widenedSchema(df, root, parent),
-            (if (parent == 0) Nil else bodyRefs(root, parent)) ++ lines,
-            props = Map("op" -> "append")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-    }
-    committed
+    casAppend(df, root, branch, v, token, lines)
   }
 
   /** Files of snapshot `v` in the partition a point-lookup literal
@@ -2060,58 +1974,8 @@ object Snapshots {
     * version.
     */
   def deleteWhere(spark: SparkSession, root: String, column: String,
-                  keys: DataFrame, branch: String = "main"): Int = {
-    import org.apache.spark.sql.functions.col
-    val rootP = Paths.get(root)
-    require(headOf(root, branch) > 0, s"nothing to delete from under $root")
-    val token = newToken()
-    var v = latestVersion(root) + 1
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      keys.select(col(column)).distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
-    }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("delete"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      val schema = schemaOf(root, parent)
-        .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema)
-      if (!schema.fieldNames.contains(column)) {
-        // "a refused batch changes NOTHING" covers error paths too
-        // (r16): a bad key column must not strand the staged
-        // tombstones until an age-guarded orphan sweep
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new IllegalArgumentException(
-          s"delete key column '$column' is not in the table schema")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent, schema,
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#delete\t$f\t$column\t$v"),
-            props = Map("op" -> "delete")))
-          committed = v
-        else reallocate()
-      } catch {
-        // rebase like append: an equality delete is defined against
-        // "everything committed before me", so retrying on top of the
-        // winner preserves its semantics (the delete's sequence number
-        // moves up WITH the rebase)
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
-    }
-    committed
-  }
+                  keys: DataFrame, branch: String = "main"): Int =
+    deleteImpl(spark, root, column, keys, branch, Nil)
 
   /** CHECKED equality delete (r16 — closing the checked-DML surface's
     * delete gap: append/merge/update validated their writes, but a
@@ -2156,8 +2020,14 @@ object Snapshots {
                     keys: DataFrame,
                     checks: Seq[graft.operators.QualityChecks.Check],
                     branch: String = "main"): Int = {
-    import org.apache.spark.sql.functions.col
     require(checks.nonEmpty, "deleteChecked without checks is deleteWhere")
+    deleteImpl(spark, root, column, keys, branch, checks)
+  }
+
+  private def deleteImpl(spark: SparkSession, root: String, column: String,
+                         keys: DataFrame, branch: String,
+                         checks: Seq[graft.operators.QualityChecks.Check]): Int = {
+    import org.apache.spark.sql.functions.col
     // row removal cannot mint a RowPredicate or Unique violation —
     // those are write-side concerns, enforced when the rows were
     // WRITTEN (the scaladoc's scoping rule made executable, r16):
@@ -2173,94 +2043,41 @@ object Snapshots {
     val base0 = headOf(root, branch)
     require(base0 > 0, s"nothing to delete from under $root")
     val token = newToken()
-    var v = latestVersion(root) + 1
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      keys.select(col(column)).distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
-    }
-    def dropStaged(): Unit =
-      deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-    // post-image from the WRITTEN key bytes (deterministic; never
-    // recomputes `keys`) — the appendChecked validate-what-was-
-    // written rule applied to a tombstone set
-    val bad: Seq[(String, Long)] =
-      try {
-        if (inboundOnly.isEmpty) Nil
-        else {
-          val staged =
-            if (delFiles.isEmpty) keys.select(col(column)).limit(0)
-            else spark.read.parquet(delFiles: _*).select(col(column))
-          val post = read(spark, root, base0)
-            .join(staged, Seq(column), "left_anti")
-          graft.operators.QualityChecks.report(post, inboundOnly)
-            .filter(!col("passed"))
-            .collect() // bounded: ≤ one row per declared check
-            .map(r => (r.getString(0), r.getLong(1))).toSeq
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        dropStaged(); throw e }
-    if (bad.nonEmpty) {
-      dropStaged()
-      throw new IllegalStateException(
-        "deleteChecked refused — constraint violations: " + bad.map {
-          case (n, c) => s"$n ($c rows)" }.mkString(", "))
-    }
-    afterCheckedValidation()
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("delete"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      // scoped precisely (r16): rewrites carry the same rows and
-      // APPENDS only add keys — InboundRef (the one check class this
-      // path validates) is monotone in the table's key set, so a
-      // concurrent append cannot invalidate the basis; only a
-      // concurrent delete/merge/update (which can REMOVE a referenced
-      // key) forces the abort. No inbound check ⇒ nothing validated ⇒
-      // full rebase liveness, like deleteWhere.
-      if (inboundOnly.nonEmpty && parent != base0 &&
-          basisWindowInvalidated(root, base0, parent) { p =>
-            !p.get("rewrite").contains("true") &&
-              !p.get("op").contains("append")
-          }) {
-        dropStaged()
+    val v0 = latestVersion(root) + 1
+    val delFiles = writeDataFiles(keys.select(col(column)).distinct(),
+      rootP, v0, token, "delete")
+    if (inboundOnly.nonEmpty)
+      // post-image from the WRITTEN key bytes (deterministic; never
+      // recomputes `keys`) — the appendChecked validate-what-was-
+      // written rule applied to a tombstone set: an empty batch whose
+      // survivors are the head minus the staged keys
+      validateStagedOrAbort(spark, Seq(stagedDir(rootP, "delete", v0, token)),
+        Nil, inboundOnly,
+        survivors = Some(read(spark, root, base0).join(
+          if (delFiles.isEmpty) keys.select(col(column)).limit(0)
+          else spark.read.parquet(delFiles: _*).select(col(column)),
+          Seq(column), "left_anti")),
+        op = "deleteChecked")
+    if (checks.nonEmpty) afterCheckedValidation()
+    commitStaged(root, branch, v0, token, "delete") { (parent, _) =>
+      // no inbound check ⇒ nothing validated ⇒ full rebase liveness:
+      // an equality delete is defined against "everything committed
+      // before me", so retrying on top of the winner preserves its
+      // semantics (its sequence number moves up WITH the rebase)
+      if (basisInvalidated(root, inboundOnly, base0, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked delete aborted: a concurrent commit in ($base0, " +
             s"$parent] invalidated its post-image validation basis — " +
             "re-read and re-run")
-      }
+    } { (parent, v) =>
       val schema = schemaOf(root, parent)
         .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema)
-      if (!schema.fieldNames.contains(column)) {
-        // "a refused batch changes NOTHING" covers error paths too
-        // (r16): a bad key column must not strand the staged
-        // tombstones until an age-guarded orphan sweep
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+      if (!schema.fieldNames.contains(column))
         throw new IllegalArgumentException(
           s"delete key column '$column' is not in the table schema")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent, schema,
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#delete\t$f\t$column\t$v"),
-            props = Map("op" -> "delete")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+      StagedCommit(schema, delFiles.map(f => s"#delete\t$f\t$column\t$v"),
+        Map("op" -> "delete"))
     }
-    committed
   }
 
   /** POSITIONAL DELETE (merge-on-read, Iceberg v2's second delete
@@ -2291,55 +2108,19 @@ object Snapshots {
     require(headOf(root, branch) > 0, s"nothing to delete from under $root")
     val token = newToken()
     val base0 = headOf(root, branch)
-    var v = latestVersion(root) + 1
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
+    val v0 = latestVersion(root) + 1
+    val delFiles = writeDataFiles(
       liveScan(spark, root, base0, files(root, base0), keepMeta = true)
         .filter(predicate)
         .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-        .distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
+        .distinct(), rootP, v0, token, "delete")
+    commitStaged(root, branch, v0, token, "delete") { (parent, _) =>
+      requireNoRewriteBetween(root, base0, parent, "positional delete")
+    } { (parent, v) =>
+      StagedCommit(schemaOf(root, parent)
+          .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema),
+        delFiles.map(f => s"#posdelete\t$f\t$v"), Map("op" -> "delete"))
     }
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token, Seq("delete"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      // a rewrite anywhere in the unseen window (the branch chain from
-      // this delete's base to the current head) moves rows to new
-      // paths — the tombstones would dangle and the rows resurrect;
-      // abort rather than corrupt
-      val rewrote = lineageBetween(root, base0, parent).find(w =>
-        propsOf(root, w).get("rewrite").contains("true"))
-      if (rewrote.isDefined) {
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new java.util.ConcurrentModificationException(
-          s"positional delete aborted: commit ${rewrote.get} rewrote the " +
-            "data files these tombstones name — re-read and re-run")
-      }
-      try {
-        val schema = schemaOf(root, parent)
-          .getOrElse(rawScan(spark, root, parent, files(root, parent)).schema)
-        if (publish(rootP, root, branch, v, seq, parent, schema,
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#posdelete\t$f\t$v"),
-            props = Map("op" -> "delete")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
-    }
-    committed
   }
 
   /** ROW-LEVEL UPDATE (merge-on-read): ONE atomic commit that
@@ -2405,109 +2186,51 @@ object Snapshots {
     require(set.nonEmpty, "update needs at least one SET column")
     val token = newToken()
     val base0 = headOf(root, branch)
-    var v = latestVersion(root) + 1
+    val v0 = latestVersion(root) + 1
     val matching = liveScan(spark, root, base0, files(root, base0),
       keepMeta = true).filter(where)
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      matching.select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-        .distinct()
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(delDir)
-    }
     // ONE select, not chained withColumn: SQL UPDATE evaluates every
     // SET right-hand side against the OLD row, so interdependent
     // assignments (SET a = b, b = a swaps) must not see each other's
     // new values — and must not depend on the Map's iteration order
     val preimage = matching.drop(FileCol, PosCol)
-    set.keys.foreach { c =>
-      if (!preimage.columns.contains(c)) {
-        // the tombstones are already staged — a bad SET column must
-        // not strand them until an age-guarded orphan sweep ("a
-        // refused batch changes NOTHING" covers error paths, r16)
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new IllegalArgumentException(s"SET names unknown column '$c'")
-      }
+    // checked before anything is staged: a refused update changes
+    // NOTHING (r16)
+    set.keys.filterNot(preimage.columns.contains).foreach { c =>
+      throw new IllegalArgumentException(s"SET names unknown column '$c'")
     }
+    val delFiles = writeDataFiles(
+      matching.select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
+        .distinct(), rootP, v0, token, "delete")
     val updated = preimage.select(preimage.columns.toIndexedSeq.map(c =>
       set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    val newFiles = writeDataFiles(updated, rootP, v, token)
-    var dataLines = entryLines(updated, newFiles)
+    val newFiles = writeDataFiles(updated, rootP, v0, token)
+    val dataLines = entryLines(updated, newFiles)
     if (checks.nonEmpty)
       // survivors = the head's rows the predicate does not match (a
       // NULL predicate row is unmatched and SURVIVES — coalesce keeps
       // it in the survivor leg; see updateChecked)
       validateStagedOrAbort(spark,
-        Seq(rootP.resolve(s"data_v${v}_$token"),
-          rootP.resolve(s"delete_v${v}_$token")),
+        Seq("data", "delete").map(stagedDir(rootP, _, v0, token)),
         newFiles, checks,
         survivors = Some(read(spark, root, base0)
           .filter(!org.apache.spark.sql.functions.coalesce(where,
             org.apache.spark.sql.functions.lit(false)))),
         op = "updateChecked")
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token,
-        Seq("data", "delete"))
-      dataLines = dataLines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
-      // same post-image-scoped (Unique/InboundRef) validation-basis
-      // rule as the checked merge (rewrites are handled by the
-      // dangling-tombstone abort below). Appends invalidate a Unique
-      // basis (they can add a colliding key) but never an InboundRef
-      // one (only ever add keys — monotone), so an InboundRef-only
-      // check set keeps liveness under concurrent appends (r16)
-      if ({
-            val hasU = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.Unique])
-            val hasI = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
-            (hasU || hasI) && parent != base0 &&
-              basisWindowInvalidated(root, base0, parent) { p =>
-                !p.get("rewrite").contains("true") &&
-                  (hasU || !p.get("op").contains("append"))
-              }
-          }) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+    commitStaged(root, branch, v0, token, "data", "delete") { (parent, _) =>
+      // the checked merge's validation-basis rule; rewrites are
+      // handled by the dangling-tombstone abort below
+      if (basisInvalidated(root, checks, base0, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked update aborted: a concurrent commit in ($base0, " +
             s"$parent] invalidated its Unique-validation basis — " +
             "re-read and re-run")
-      }
-      val rewrote = lineageBetween(root, base0, parent).find(w =>
-        propsOf(root, w).get("rewrite").contains("true"))
-      if (rewrote.isDefined) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
-        throw new java.util.ConcurrentModificationException(
-          s"row update aborted: commit ${rewrote.get} rewrote the data " +
-            "files these tombstones name — re-read and re-run")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            widenedSchema(updated, root, parent),
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#posdelete\t$f\t$v") ++
-              dataLines,
-            props = Map("op" -> "update")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+      requireNoRewriteBetween(root, base0, parent, "row update")
+    } { (parent, v) =>
+      StagedCommit(widenedSchema(updated, root, parent),
+        delFiles.map(f => s"#posdelete\t$f\t$v") ++ dataLines,
+        Map("op" -> "update"))
     }
-    committed
   }
 
   /** MERGE (upsert, merge-on-read): ONE atomic commit that both
@@ -2588,104 +2311,53 @@ object Snapshots {
     require(dup.isEmpty,
       s"merge source has duplicate '$column' keys (e.g. ${dup.headOption})")
     val token = newToken()
-    var v = latestVersion(root) + 1
-    val newFiles = writeDataFiles(source, rootP, v, token)
-    var dataLines = entryLines(source, newFiles)
-    var delFiles = {
-      val delDir = rootP.resolve(s"delete_v${v}_$token")
-      source.select(col(column)).write.mode("overwrite")
-        .parquet(delDir.toString)
-      listParquet(delDir)
-    }
-    // the merge's own key set, read back from the already-written
-    // delete files (deterministic — never recomputes `source`)
-    def ownKeys = spark.read.parquet(delFiles: _*).select(col(column))
+    val v0 = latestVersion(root) + 1
+    val newFiles = writeDataFiles(source, rootP, v0, token)
+    val dataLines = entryLines(source, newFiles)
+    val delFiles = writeDataFiles(source.select(col(column)), rootP, v0,
+      token, "delete")
+    // the merge's own key set, read back from attempt `v`'s already-
+    // written delete files (deterministic — never recomputes `source`)
+    def ownKeys(v: Int) = spark.read
+      .parquet(listParquet(stagedDir(rootP, "delete", v, token)): _*)
+      .select(col(column))
     if (checks.nonEmpty)
       // survivors = the head's live rows minus the replaced keys: the
       // post-image complement of this staged batch (see mergeChecked)
       validateStagedOrAbort(spark,
-        Seq(rootP.resolve(s"data_v${v}_$token"),
-          rootP.resolve(s"delete_v${v}_$token")),
+        Seq("data", "delete").map(stagedDir(rootP, _, v0, token)),
         newFiles, checks,
         survivors = Some(read(spark, root, base0)
-          .join(ownKeys, Seq(column), "left_anti")),
+          .join(ownKeys(v0), Seq(column), "left_anti")),
         op = "mergeChecked")
-    def reallocate(): Unit = {
-      val newV = reallocateStaged(rootP, root, v, token,
-        Seq("data", "delete"))
-      dataLines = dataLines.map(
-        _.replace(s"data_v${v}_$token", s"data_v${newV}_$token"))
-      delFiles = delFiles.map(
-        _.replace(s"delete_v${v}_$token", s"delete_v${newV}_$token"))
-      v = newV
-    }
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, branch, v)
-      if (v <= parent) { reallocate() } // stale pre-write allocation
-      else {
+    commitStaged(root, branch, v0, token, "data", "delete") { (parent, v) =>
       // a checked merge's cross-batch Unique validation (and any
       // InboundRef post-image leg, r16) ran against base0's
-      // survivors; a later NON-REWRITE commit could add a colliding
-      // row — or delete a referenced key — on a basis the merge-key
-      // serializability check
-      // does not cover — abort rather than publish an unvalidated
-      // post-image (r15; same re-read-and-re-run contract as a key
-      // conflict). Scoped precisely (second review pass): row-local
-      // checks are basis-free (they validate the written bytes
-      // alone), and a rewrite carries the same rows — neither can
-      // invalidate anything, so neither costs liveness here. Appends
-      // invalidate a Unique basis (can add a colliding key) but never
-      // an InboundRef one (only ever add keys — monotone), so an
-      // InboundRef-only check set keeps liveness under concurrent
-      // appends (r16)
-      if ({
-            val hasU = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.Unique])
-            val hasI = checks.exists(
-              _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
-            (hasU || hasI) && parent != base0 &&
-              basisWindowInvalidated(root, base0, parent) { p =>
-                !p.get("rewrite").contains("true") &&
-                  (hasU || !p.get("op").contains("append"))
-              }
-          }) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+      // survivors; a later commit could add a colliding row — or
+      // delete a referenced key — on a basis the merge-key
+      // serializability check below does not cover — abort rather
+      // than publish an unvalidated post-image (r15; same
+      // re-read-and-re-run contract as a key conflict)
+      if (basisInvalidated(root, checks, base0, parent))
         throw new java.util.ConcurrentModificationException(
           s"checked merge aborted: a concurrent commit in ($base0, " +
             s"$parent] invalidated its Unique-validation basis — " +
             "re-read and re-run")
-      }
       // revalidate EVERY attempt's full unseen window — the branch
       // chain (base0, parent] — not only CAS losers': a commit landing
       // between entry and the first CAS succeeds at CAS yet was still
       // never read
       if (parent != base0 &&
-          keysTouchedBetween(spark, root, base0, parent, column, ownKeys)) {
-        deleteTreeQuietly(rootP.resolve(s"data_v${v}_$token"))
-        deleteTreeQuietly(rootP.resolve(s"delete_v${v}_$token"))
+          keysTouchedBetween(spark, root, base0, parent, column, ownKeys(v)))
         throw new java.util.ConcurrentModificationException(
           s"serializable merge on '$column' aborted: a concurrent " +
             s"commit in ($base0, $parent] touched one of this merge's " +
             "keys — re-read the table and re-run the merge")
-      }
-      try {
-        if (publish(rootP, root, branch, v, seq, parent,
-            widenedSchema(source, root, parent),
-            bodyRefs(root, parent) ++
-              delFiles.map(f => s"#delete\t$f\t$column\t$v") ++
-              dataLines,
-            props = Map("op" -> "merge")))
-          committed = v
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
-      }
+    } { (parent, v) =>
+      StagedCommit(widenedSchema(source, root, parent),
+        delFiles.map(f => s"#delete\t$f\t$column\t$v") ++ dataLines,
+        Map("op" -> "merge"))
     }
-    committed
   }
 
   /** True iff any commit in `(baseV, uptoV]` (rewrite commits excepted
@@ -3222,22 +2894,6 @@ object Snapshots {
     * of `to` (diverged refs have no linear window). Public because the
     * streaming ref tail replays exactly this window per ref advance.
     */
-  /** The checked-DML basis question — "did a commit land in
-    * (from, to] of a kind that can invalidate my validation?" —
-    * fail-SAFE under concurrent ref surgery (r16 review finding): a
-    * concurrent rollback makes `from` a non-ancestor of `to`, and
-    * [[lineageBetween]] would throw its divergence
-    * IllegalArgumentException from INSIDE the abort-condition
-    * expression — skipping the staged-dir cleanup and masking the
-    * documented ConcurrentModificationException contract. A window
-    * the walker cannot even resolve is by definition invalidated.
-    */
-  private def basisWindowInvalidated(root: String, from: Int, to: Int)(
-      invalidates: Map[String, String] => Boolean): Boolean =
-    try lineageBetween(root, from, to)
-      .exists(w => invalidates(propsOf(root, w)))
-    catch { case _: IllegalArgumentException => true }
-
   def lineageBetween(root: String, from: Int, to: Int): Seq[Int] = {
     var v = to
     var acc = List.empty[Int]
@@ -3249,6 +2905,54 @@ object Snapshots {
       s"v$from is not an ancestor of v$to under $root (diverged refs?)")
     acc
   }
+
+  /** The checked-DML basis question — did a commit land in
+    * (base, parent] of a kind that can invalidate what `checks`
+    * validated against `base`'s rows? Only post-image-scoped checks
+    * (Unique, InboundRef) have a basis: row-local checks validate the
+    * written bytes alone, and a rewrite carries the same rows, so
+    * neither costs liveness. Appends invalidate a Unique basis (they
+    * can add a colliding key) but never an InboundRef one — they only
+    * add keys, InboundRef is monotone in the table's key set, and
+    * cherry-picks strip delete lines, so op=append is purely additive
+    * everywhere (r16). Only a commit that can REMOVE a referenced key
+    * (delete/merge/update) invalidates an InboundRef basis.
+    *
+    * Fail-SAFE under concurrent ref surgery (r16 review finding): a
+    * concurrent rollback makes `base` a non-ancestor of `parent`, and
+    * [[lineageBetween]]'s divergence IllegalArgumentException must not
+    * mask the documented ConcurrentModificationException contract. A
+    * window the walker cannot even resolve is by definition
+    * invalidated.
+    */
+  private def basisInvalidated(root: String,
+      checks: Seq[graft.operators.QualityChecks.Check],
+      base: Int, parent: Int): Boolean = {
+    val unique = checks.exists(
+      _.isInstanceOf[graft.operators.QualityChecks.Unique])
+    val inbound = checks.exists(
+      _.isInstanceOf[graft.operators.QualityChecks.InboundRef])
+    (unique || inbound) && parent != base &&
+      (try lineageBetween(root, base, parent).exists { w =>
+        val p = propsOf(root, w)
+        !p.get("rewrite").contains("true") &&
+          (unique || !p.get("op").contains("append"))
+      } catch { case _: IllegalArgumentException => true })
+  }
+
+  /** Position tombstones name PHYSICAL files, so a rewrite commit
+    * anywhere in the unseen window (base, parent] moved their rows to
+    * new paths — the tombstones would dangle and the rows resurrect.
+    * Abort rather than corrupt (the Iceberg validateNoConflicting*
+    * rule for position deletes); non-rewrite winners rebase.
+    */
+  private def requireNoRewriteBetween(root: String, base: Int,
+                                      parent: Int, op: String): Unit =
+    lineageBetween(root, base, parent)
+      .find(w => propsOf(root, w).get("rewrite").contains("true"))
+      .foreach(w => throw new java.util.ConcurrentModificationException(
+        s"$op aborted: commit $w rewrote the data files these " +
+          "tombstones name — re-read and re-run"))
 
   /** Create branch `name` at `from` (default: the current main head).
     * The FIRST branch materializes `_refs/main` from the legacy head —
@@ -3365,49 +3069,28 @@ object Snapshots {
     }
     require(own.nonEmpty, s"v$v added no data files; nothing to pick")
     val token = newToken()
-    var w = latestVersion(root) + 1
+    val w = latestVersion(root) + 1
     val rootAbs = rootP.toAbsolutePath
-    def relink(into: Int): Seq[String] = {
-      val dst = rootP.resolve(s"data_v${into}_$token")
-      own.map { line =>
-        val parts = line.split('\t')
-        val f = Paths.get(parts.head).toAbsolutePath
-        val rel = rootAbs.relativize(f)
-        // drop the source data dir's top segment, keep any partition
-        // subdirs beneath it
-        val sub = rel.subpath(1, rel.getNameCount)
-        val out = dst.resolve(sub.toString)
-        Files.createDirectories(out.getParent)
-        if (!Files.exists(out)) Files.createLink(out, f)
-        (out.toAbsolutePath.toString +: parts.tail.toSeq).mkString("\t")
-      }
-    }
-    var lines = relink(w)
-    def reallocate(): Unit = {
-      val newW = reallocateStaged(rootP, root, w, token, Seq("data"))
-      lines = lines.map(
-        _.replace(s"data_v${w}_$token", s"data_v${newW}_$token"))
-      w = newW
+    val dst = stagedDir(rootP, "data", w, token)
+    val lines = own.map { line =>
+      val parts = line.split('\t')
+      val f = Paths.get(parts.head).toAbsolutePath
+      val rel = rootAbs.relativize(f)
+      // drop the source data dir's top segment, keep any partition
+      // subdirs beneath it
+      val sub = rel.subpath(1, rel.getNameCount)
+      val out = dst.resolve(sub.toString)
+      Files.createDirectories(out.getParent)
+      if (!Files.exists(out)) Files.createLink(out, f)
+      (out.toAbsolutePath.toString +: parts.tail.toSeq).mkString("\t")
     }
     val srcSchema = schemaOf(root, v)
       .getOrElse(rawScan(spark, root, v, files(root, v)).schema)
-    var committed = -1
-    while (committed < 0) {
-      val (parent, seq) = commitBasis(root, target, w)
-      if (w <= parent) { reallocate() } else
-      try {
-        if (publish(rootP, root, target, w, seq, parent,
-            promotedSchema(srcSchema, root, parent),
-            (if (parent == 0) Nil else bodyRefs(root, parent)) ++ lines,
-            props = Map("op" -> "append", "pickedFrom" -> v.toString)))
-          committed = w
-        else reallocate()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          reallocate()
-      }
+    // a pick is an append: it always rebases
+    commitStaged(root, target, w, token, "data")((_, _) => ()) { (parent, _) =>
+      StagedCommit(promotedSchema(srcSchema, root, parent), lines,
+        Map("op" -> "append", "pickedFrom" -> v.toString))
     }
-    committed
   }
 
   /** ROLLBACK (Iceberg `rollback_to_snapshot`): move a ref's head
@@ -3483,35 +3166,88 @@ object Snapshots {
       (head, seq)
     }
 
-  /** Manifest link + (branched) ref CAS — the two-step publish of one
-    * commit attempt. Returns true when the commit is durable on the
-    * branch; false when the head CAS lost (own manifest unlinked —
-    * caller re-resolves the head and retries). Propagates
-    * [[java.nio.file.FileAlreadyExistsException]] when the VERSION
-    * NUMBER was claimed by someone else (caller reallocates).
+  /** One commit attempt as a [[commitStaged]] caller builds it for a
+    * (parent, version) pair: the committed schema, the commit's OWN
+    * body lines, its props, and whether the parent's body refs carry
+    * forward (every write but a rewrite, whose lines replace the
+    * body). `own` names staged files under the FIRST attempt's
+    * version; [[commitStaged]] re-derives them for later ones.
     */
+  private final case class StagedCommit(
+      schema: org.apache.spark.sql.types.StructType,
+      own: Seq[String], props: Map[String, String],
+      carryParent: Boolean = true)
+
+  /** THE optimistic commit loop (r9 protocol) every write path runs:
+    * the writer's bytes are already staged under
+    * `<kind>_v<v0>_<token>` dirs, and each attempt resolves the
+    * branch basis, applies the path's `conflict` rule — return to
+    * rebase onto the new head, throw to abort — builds the manifest
+    * via `attempt`, and publishes. A lost version number or head CAS
+    * reallocates ([[reallocateStaged]], renaming the staged dirs so
+    * [[dataVersionOf]] sequence scoping stays truthful) and retries;
+    * the staged data is never rewritten. Both callbacks get
+    * (parent, version); the loop re-checks `v > parent` before either
+    * runs, because a writer whose allocation went stale while another
+    * branch advanced would otherwise publish below its parent,
+    * inverting the sequence order delete scoping and lineage rely on.
+    *
+    * A refused batch changes NOTHING: any throw from `conflict` or
+    * `attempt` deletes the staged dirs at the current version before
+    * it propagates, so no path stages cleanup of its own.
+    */
+  private def commitStaged(root: String, branch: String, v0: Int,
+      token: String, kinds: String*)(conflict: (Int, Int) => Unit)(
+      attempt: (Int, Int) => StagedCommit): Int = {
+    val rootP = Paths.get(root)
+    var v = v0
+    var committed = -1
+    while (committed < 0) {
+      val (parent, seq) = commitBasis(root, branch, v)
+      val won = v > parent && {
+        val c =
+          try { conflict(parent, v); attempt(parent, v) }
+          catch { case scala.util.control.NonFatal(e) =>
+            kinds.foreach(k => deleteTreeQuietly(stagedDir(rootP, k, v, token)))
+            throw e
+          }
+        val own = if (v == v0) c.own else c.own.map(l =>
+          kinds.foldLeft(l)((s, k) =>
+            s.replace(s"${k}_v${v0}_$token", s"${k}_v${v}_$token")))
+        val carried =
+          if (c.carryParent && parent > 0) bodyRefs(root, parent) else Nil
+        try publish(rootP, root, branch, v, seq, parent, c.schema,
+          carried ++ own, c.props)
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      }
+      if (won) committed = v
+      else v = reallocateStaged(rootP, root, v, token, kinds)
+    }
+    committed
+  }
+
   /** Pick the next attempt's version number and move the staged
-    * `<kind>_v<v>_<token>` dirs under it — the ONE spelling of the
-    * rebase/reallocation step every committer retries through. The
-    * result exceeds BOTH the current global allocator state and the
-    * caller's previous attempt, so a version number never regresses
-    * across retries; callers must ALSO re-check `v > parent` each
-    * iteration (see the loop guards): a writer whose allocation went
-    * stale while another branch advanced could otherwise publish a
-    * commit numbered below its parent, inverting the sequence-number
-    * order that delete scoping and lineage both rely on.
+    * `<kind>_v<v>_<token>` dirs under it. The result exceeds BOTH the
+    * current global allocator state and the previous attempt, so a
+    * version number never regresses across retries.
     */
   private def reallocateStaged(rootP: Path, root: String, v: Int,
                                token: String, kinds: Seq[String]): Int = {
     val newV = math.max(latestVersion(root), v) + 1
     kinds.foreach { k =>
-      val src = rootP.resolve(s"${k}_v${v}_$token")
-      if (Files.exists(src))
-        Files.move(src, rootP.resolve(s"${k}_v${newV}_$token"))
+      val src = stagedDir(rootP, k, v, token)
+      if (Files.exists(src)) Files.move(src, stagedDir(rootP, k, newV, token))
     }
     newV
   }
 
+  /** Manifest link + (branched) ref CAS — the two-step publish of one
+    * commit attempt. Returns true when the commit is durable on the
+    * branch; false when the head CAS lost (own manifest unlinked —
+    * [[commitStaged]] re-resolves the head and retries). Propagates
+    * [[java.nio.file.FileAlreadyExistsException]] when the VERSION
+    * NUMBER was claimed by someone else ([[commitStaged]] reallocates).
+    */
   private def publish(rootP: Path, root: String, branch: String, v: Int,
                       seq: Int, parent: Int,
                       schema: org.apache.spark.sql.types.StructType,

@@ -76,28 +76,33 @@ class BenchSplitSpec extends AnyFunSuite {
   }
 
   test("machine line carries the adjudication block inside the kept tail") {
+    // CPU ms scale with the host's cores (the cpuFraction spec's rule),
+    // so cf = (3800 + 100) ms x cores / (8.7 wall-s x cores) = 0.45 on
+    // every host
+    val cores = Runtime.getRuntime.availableProcessors()
+    def cpuS(msPerCore: Long): String =
+      (BigDecimal(msPerCore * cores) / 1000).bigDecimal
+        .stripTrailingZeros.toPlainString
     val results = Seq("q92_semantic_dedup" -> 4.7, "q222_semantic_pairs_distributed" -> 4.0,
       "q01_agg" -> 0.1, "q13_x" -> -1.0)
     val meta = Bench.BenchMeta(
       la = Seq((0.4, 1.2, 2.3), (18.2, 5.4, 3.0)),
       rr = Seq("q139_bigram_fluency" -> (8.5, 0.71)),
-      io = Seq("q92_semantic_dedup" -> ((123456789L, 4560L, 38000L)),
-        "q222_semantic_pairs_distributed" -> ((0L, 0L, 1200L))),
+      io = Seq("q92_semantic_dedup" -> ((123456789L, 4560L, 3800L * cores)),
+        "q222_semantic_pairs_distributed" -> ((0L, 0L, 100L * cores))),
       cf = Seq(0.43, 0.39))
     val line = Bench.machineLine(results, "sf0.1", meta)
     // cf/cfs/la/rr/hot sit between "sf" and the trailing "value" — the
     // region the driver's 2000-char tail always keeps
     val afterSf = line.substring(line.indexOf("\"sf\":"))
-    // battery cf = (38 + 1.2) CPU-s / ((4.7 + 4.0) wall-s * cores) —
-    // cores is machine-dependent, so pin presence + position, value
-    // via cpuFraction's own spec below
-    assert(afterSf.contains("\"cf\":0."), line)
+    assert(afterSf.contains("\"cf\":0.45,"), line)
     assert(afterSf.contains("\"cfs\":[0.43,0.39]"), line)
     assert(afterSf.indexOf("\"cf\":") < afterSf.indexOf("\"la\":"), line)
     assert(afterSf.contains("\"la\":[[0.4,1.2,2.3],[18.2,5.4,3]]"), line)
     assert(afterSf.contains("\"rr\":{\"139\":[8.5,0.71]}"), line)
     // hot = slowest-first, [read MB, GC s, CPU s] of the best run
-    assert(afterSf.contains("\"hot\":{\"92\":[117.7,4.6,38],\"222\":[0,0,1.2]}"), line)
+    assert(afterSf.contains(
+      s"\"hot\":{\"92\":[117.7,4.6,${cpuS(3800)}],\"222\":[0,0,${cpuS(100)}]}"), line)
     assert(afterSf.indexOf("\"value\":") > afterSf.indexOf("\"hot\":"), line)
     // no meta → no adjudication fields, byte-identical legacy layout
     assert(!Bench.machineLine(results, "sf0.1").contains("\"la\":"))

@@ -104,4 +104,22 @@ class BigramCountsSpec extends AnyFunSuite with SparkTestSession {
       Row(1L, Seq("only")), Row(2L, Seq.empty[String]), Row(3L, null))))
     assert(out.count() == 0L)
   }
+
+  test("table sizing is Long-safe: 2^30 slots at most, refused loudly past it") {
+    import BigramRuntime.tableCapacity
+    // bigramCounts: pairs x 2 slots, rounded up to a power of two
+    assert(tableCapacity(1, 2L) == 4)
+    assert(tableCapacity(3, 6L) == 8)
+    assert(tableCapacity(1 << 29, 2L * (1 << 29)) == (1 << 30))
+    val pairs = (1 << 29) + 1 // Int doubling of the cap wrapped past 2^30
+    val e = intercept[IllegalArgumentException] {
+      tableCapacity(pairs, 2L * pairs)
+    }
+    assert(e.getMessage.contains(s"$pairs elements"), e.getMessage)
+    // tokenHashCounts: highestOneBit(n) x 4 slots
+    assert(tableCapacity(1 << 28, (1L << 28) * 4) == (1 << 30))
+    intercept[IllegalArgumentException] { // Int math wrapped to 2^31 < 0
+      tableCapacity(1 << 29, (1L << 29) * 4)
+    }
+  }
 }

@@ -484,28 +484,55 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestSession {
 
   test("positional delete racing a rewrite aborts instead of resurrecting rows") {
     import org.apache.spark.sql.functions.{col, udf}
-    val root = Staging.tempDir("snap_spec_posdel_race").toString
-    Snapshots.append(Seq((1L, 10L), (2L, 21L)).toDF("id", "x"), root)
-    SnapshotsSpec.mergeGate.set(new java.util.concurrent.CountDownLatch(1))
-    SnapshotsSpec.mergeEntered.set(new java.util.concurrent.CountDownLatch(1))
-    val wait = udf(() => {
-      SnapshotsSpec.mergeEntered.get().countDown()
-      SnapshotsSpec.mergeGate.get().await()
-      true
-    })
-    val worker = new java.util.concurrent.FutureTask(() =>
-      Snapshots.deleteWhereMatching(spark, root, col("x") % 2 === 1 && wait()))
-    new Thread(worker, "posdel-writer").start()
-    SnapshotsSpec.mergeEntered.get().await() // parked resolving victims
-    Snapshots.compact(spark, root, targetFiles = 1) // the rewrite lands
-    SnapshotsSpec.mergeGate.get().countDown()
-    val r = try { worker.get(); None } catch {
-      case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+    import scala.jdk.CollectionConverters._
+    // both position-tombstoning writers: the delete, and the update
+    // (tombstones + rewritten images in one commit)
+    val writers = Seq[(String, (String, org.apache.spark.sql.Column) => Int)](
+      "deleteWhereMatching" -> ((root, p) =>
+        Snapshots.deleteWhereMatching(spark, root, p)),
+      "updateWhere" -> ((root, p) =>
+        Snapshots.updateWhere(spark, root, p, Map("x" -> (col("x") + 100L)))))
+    for ((name, write) <- writers) {
+      val root = Staging.tempDir(s"snap_spec_posdel_race_$name").toString
+      Snapshots.append(Seq((1L, 10L), (2L, 21L)).toDF("id", "x"), root)
+      SnapshotsSpec.mergeGate.set(new java.util.concurrent.CountDownLatch(1))
+      SnapshotsSpec.mergeEntered.set(new java.util.concurrent.CountDownLatch(1))
+      val wait = udf(() => {
+        SnapshotsSpec.mergeEntered.get().countDown()
+        SnapshotsSpec.mergeGate.get().await()
+        true
+      })
+      val worker = new java.util.concurrent.FutureTask(() =>
+        write(root, col("x") % 2 === 1 && wait()))
+      new Thread(worker, s"$name-writer").start()
+      SnapshotsSpec.mergeEntered.get().await() // parked resolving victims
+      Snapshots.compact(spark, root, targetFiles = 1) // the rewrite lands
+      SnapshotsSpec.mergeGate.get().countDown()
+      val r = try { worker.get(); None } catch {
+        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+      }
+      assert(r.exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+        s"$name: $r")
+      // nothing was deleted or updated, and no tombstone set leaked
+      // into the manifest
+      assert(Snapshots.read(spark, root).as[(Long, Long)].collect().toSet ==
+        Set(1L -> 10L, 2L -> 21L), name)
+      assert(Snapshots.posDeleteSets(root, Snapshots.latestVersion(root)).isEmpty,
+        name)
+      // the aborted writer unstaged everything: the only staged dirs
+      // left are the ones committed versions reference
+      val staged = {
+        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.startsWith("data_v") || n.startsWith("delete_v"))
+          .toSet finally ls.close()
+      }
+      val referenced = (1 to Snapshots.latestVersion(root))
+        .flatMap(Snapshots.files(root, _))
+        .map(f => java.nio.file.Paths.get(f).getParent.getFileName.toString)
+        .toSet
+      assert(staged == referenced, s"$name left staged dirs behind")
     }
-    assert(r.exists(_.isInstanceOf[java.util.ConcurrentModificationException]), r)
-    // nothing was deleted and no tombstone set leaked into the manifest
-    assert(Snapshots.read(spark, root).count() == 2)
-    assert(Snapshots.posDeleteSets(root, Snapshots.latestVersion(root)).isEmpty)
   }
 
   test("zero-match positional delete and update commit cleanly and change nothing") {
